@@ -92,7 +92,7 @@ def test_ymd_goldens(spark):
         assert ymd_py(d) == want, d
     import pyspark.sql.functions as F
     df = spark.createDataFrame([(d,) for d in goldens], "d long").withColumn(
-        "h", ymd(F.col("d"))
+        "h", ymd("d")
     )
     for r in df.collect():
         assert r["h"] == goldens[r["d"]], r["d"]

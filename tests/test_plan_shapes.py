@@ -531,3 +531,38 @@ def test_ivfpq_index_scan_is_partition_pruned(spark):
     n_cells_read = len([t for t in m.group(1).split(",")
                         if t.strip().rstrip(")").strip().isdigit()])
     assert 0 < n_cells_read < 16, m.group(1)
+
+
+# dashboard pane -> max hash exchanges over a checkpointed report (the
+# lookup's shape: nothing about the report's partitioning is known)
+PANE_SHUFFLE_BUDGETS = {
+    # ONE (url, Status) aggregation over the unpivoted status columns,
+    # not one per column
+    "summary_stats": 1,
+    # one url window; the url aggregation rides its partitioning (no
+    # self-join of a last-rows table back onto the sums)
+    "headline_metrics": 1,
+    "monthly_rollup": 1,
+    "totals": 1,
+    "specimen_breakdown": 1,
+    "first_last_capture": 1,
+    "chaos_melt": 0,
+    "transition_matrix": 1,
+}
+
+
+@pytest.mark.parametrize("pane", sorted(PANE_SHUFFLE_BUDGETS))
+def test_dashboard_pane_shuffle_budget(spark, pane):
+    from tests.conftest import FIXTURE_LINES_A
+    from trendmachine_spark.operators import dashboard
+    from trendmachine_spark.operators.transitions import transition_matrix
+    from trendmachine_spark.pipeline import daily_series
+    from trendmachine_spark.sources.captures import captures_from_fixture
+
+    report = daily_series(captures_from_fixture(spark, FIXTURE_LINES_A),
+                          as_of="2020-01-05").localCheckpoint(eager=True)
+    build = transition_matrix if pane == "transition_matrix" else getattr(dashboard, pane)
+    plan = build(report)._jdf.queryExecution().executedPlan().toString()
+    n = plan.count("Exchange hashpartitioning")
+    assert n <= PANE_SHUFFLE_BUDGETS[pane], f"{pane}: {n} hash exchanges > budget"
+    assert "Join" not in plan, f"{pane}: plans a join"

@@ -14,7 +14,7 @@ from trendmachine_spark.sources.cdx_live import cdx_page_url
 def test_ensure_scheme(spark):
     df = spark.createDataFrame(
         [("example.com",), ("http://a.org",), ("https://b.org",)], "u string"
-    ).select(ensure_scheme(F.col("u")).alias("fixed"))
+    ).select(ensure_scheme("u").alias("fixed"))
     assert [r["fixed"] for r in df.collect()] == [
         "https://example.com", "http://a.org", "https://b.org",
     ]
@@ -24,7 +24,7 @@ def test_status_class_edges(spark):
     df = spark.createDataFrame(
         [("200",), ("599",), ("3abc",), ("1999",), ("-",), ("0",), ("robot",)],
         "s string",
-    ).select("s", status_class(F.col("s")).alias("c"))
+    ).select("s", status_class("s").alias("c"))
     got = {r["s"]: r["c"] for r in df.collect()}
     # lexicographic range semantics, bug-compatible with main.py:147
     assert got == {"200": "2xx", "599": "5xx", "3abc": "3xx",

@@ -1,7 +1,10 @@
 """Scalar column expression builders (reference parity: SURVEY.md §2.2).
 
-All pure Catalyst expressions — no UDFs — so they stay inside
-whole-stage codegen and push down to the scan where possible.
+Each scalar is one Spark SQL template over column names (``*_sql``), so
+an operator can inline it into a ``selectExpr`` and build its whole
+projection in one call; the Column forms wrap the same template in one
+``F.expr``. All pure Catalyst expressions — no UDFs — so they stay
+inside whole-stage codegen and push down to the scan where possible.
 """
 
 from __future__ import annotations
@@ -12,55 +15,44 @@ from pyspark.sql import functions as F
 from trendmachine_spark.params import WBM
 
 
-def status_class(status: Column) -> Column:
+def status_class_sql(status: str) -> str:
     """Normalize a raw HTTP status token to its class ('2xx'..'5xx').
 
     Bug-compatible with the reference (main.py:147): the range test is a
     *lexicographic string* comparison between "200" and "599", so e.g.
     "3abc" classifies as "3xx" while "1999" or "0" pass through raw.
     """
-    return F.when(
-        status.between("200", "599"),
-        F.concat(F.substring(status, 1, 1), F.lit("xx")),
-    ).otherwise(status)
+    return (f"CASE WHEN {status} BETWEEN '200' AND '599' "
+            f"THEN concat(substring({status}, 1, 1), 'xx') ELSE {status} END")
 
 
-def day_string(ts: Column) -> Column:
+def day_string_sql(ts: str) -> str:
     """14-digit timestamp string -> ISO day string 'YYYY-MM-DD' (main.py:146)."""
-    return F.concat_ws(
-        "-",
-        F.substring(ts, 1, 4),
-        F.substring(ts, 5, 2),
-        F.substring(ts, 7, 2),
-    )
+    return f"concat_ws('-', substring({ts}, 1, 4), substring({ts}, 5, 2), substring({ts}, 7, 2))"
 
 
-def day_date(ts: Column) -> Column:
+def day_date_sql(ts: str) -> str:
     """14-digit timestamp string -> DateType day."""
-    return F.to_date(F.substring(ts, 1, 8), "yyyyMMdd")
+    return f"to_date(substring({ts}, 1, 8), 'yyyyMMdd')"
 
 
-def digest8(digest: Column) -> Column:
+def digest8_sql(digest: str) -> str:
     """Truncate a content digest to 8 chars (main.py:152)."""
-    return F.substring(digest, 1, 8)
+    return f"substring({digest}, 1, 8)"
 
 
-def urim(datetime_col: Column, url: Column) -> Column:
+def urim_sql(datetime_col: str, url: str) -> str:
     """Wayback replay URL for an observed day, '#' otherwise (main.py:231)."""
-    return F.when(
-        datetime_col != "~",
-        F.concat_ws("/", F.lit(WBM), datetime_col, url),
-    ).otherwise("#")
+    return f"CASE WHEN {datetime_col} != '~' THEN concat_ws('/', '{WBM}', {datetime_col}, {url}) ELSE '#' END"
 
 
-def ensure_scheme(url: Column) -> Column:
+def ensure_scheme_sql(url: str) -> str:
     """Prepend https:// unless the URL already has an http(s) scheme (main.py:588)."""
-    return F.when(
-        url.startswith("http://") | url.startswith("https://"), url
-    ).otherwise(F.concat(F.lit("https://"), url))
+    return (f"CASE WHEN startswith({url}, 'http://') OR startswith({url}, 'https://') "
+            f"THEN {url} ELSE concat('https://', {url}) END")
 
 
-def ymd(days: Column) -> Column:
+def ymd_spark_sql(days: str) -> str:
     """Humanize a day count as '{y}y{m}m{d}d' (main.py:31-42).
 
     Bug-compatible quirks (goldens in FIXTURES.md §3.5): 365/30 arithmetic;
@@ -68,21 +60,42 @@ def ymd(days: Column) -> Column:
     day remainder > 15 and days are dropped; 12 months carry into a year.
     Examples: 45 -> '1m15d', 380 -> '1y', 395 -> '1y1m', 1000 -> '2y9m'.
     """
-    d0 = days.cast("long")
-    y = F.floor(d0 / 365)
-    rem = d0 % 365
-    m = F.floor(rem / 30)
-    d = rem % 30
-    round_up = (y > 0) | (m > 6)
-    m2 = F.when(round_up & (d > 15), m + 1).otherwise(m)
-    d2 = F.when(round_up, F.lit(0)).otherwise(d)
-    y3 = F.when(m2 == 12, y + 1).otherwise(y)
-    m3 = F.when(m2 == 12, F.lit(0)).otherwise(m2)
-    return F.concat(
-        F.when(y3 > 0, F.concat(y3.cast("string"), F.lit("y"))).otherwise(""),
-        F.when(m3 > 0, F.concat(m3.cast("string"), F.lit("m"))).otherwise(""),
-        F.when(d2 > 0, F.concat(d2.cast("string"), F.lit("d"))).otherwise(""),
+    d0 = f"CAST({days} AS BIGINT)"
+    y = f"floor({d0} / 365)"
+    rem = f"({d0} % 365)"
+    m = f"floor({rem} / 30)"
+    d = f"({rem} % 30)"
+    round_up = f"({y} > 0 OR {m} > 6)"
+    m2 = f"(CASE WHEN {round_up} AND {d} > 15 THEN {m} + 1 ELSE {m} END)"
+    d2 = f"(CASE WHEN {round_up} THEN 0 ELSE {d} END)"
+    y3 = f"(CASE WHEN {m2} = 12 THEN {y} + 1 ELSE {y} END)"
+    m3 = f"(CASE WHEN {m2} = 12 THEN 0 ELSE {m2} END)"
+    return (
+        "concat("
+        f"CASE WHEN {y3} > 0 THEN concat(CAST({y3} AS STRING), 'y') ELSE '' END, "
+        f"CASE WHEN {m3} > 0 THEN concat(CAST({m3} AS STRING), 'm') ELSE '' END, "
+        f"CASE WHEN {d2} > 0 THEN concat(CAST({d2} AS STRING), 'd') ELSE '' END)"
     )
+
+
+def status_class(status: str) -> Column:
+    """Column form of :func:`status_class_sql` over a column name."""
+    return F.expr(status_class_sql(status))
+
+
+def urim(datetime_col: str, url: str) -> Column:
+    """Column form of :func:`urim_sql` over two column names."""
+    return F.expr(urim_sql(datetime_col, url))
+
+
+def ensure_scheme(url: str) -> Column:
+    """Column form of :func:`ensure_scheme_sql` over a column name."""
+    return F.expr(ensure_scheme_sql(url))
+
+
+def ymd(days: str) -> Column:
+    """Column form of :func:`ymd_spark_sql` over a column name."""
+    return F.expr(ymd_spark_sql(days))
 
 
 def ymd_py(days: int) -> str:

@@ -7,22 +7,42 @@ O41 (first/last) — reference main.py:383-405.
 
 All inputs are the report table produced by
 :func:`trendmachine_spark.pipeline.daily_series` (url + REPORT_COLUMNS).
-Everything here is built-in aggregations — no UDFs, fully codegen'd.
+Everything here is built-in aggregations — no UDFs — and every
+expression is Spark SQL text, so a pane's plan builds in a few calls.
+
+Each pane is at most one shuffle over the report:
+
+* ``summary_stats`` unpivots the five status columns into
+  (url, Status, v) rows and runs ONE aggregation keyed by
+  (url, Status), not one aggregation per column;
+* ``headline_metrics`` ranks each url's days newest-first in one
+  window and reads the last/previous-day values with ``max_by`` in the
+  same url aggregation as the sums (which reuses the window's url
+  partitioning and order), with no self-join;
+* ``content_value_counts`` adds the range exchange of its ``orderBy``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from trendmachine_spark.functions.scalars import ymd
+from trendmachine_spark.functions.scalars import ymd_spark_sql
 
 STATUS_COLS = ["2xx", "3xx", "4xx", "5xx", "All"]
 
 
+def _agg(df: DataFrame, keys: list, exprs: list[str]) -> DataFrame:
+    return df.groupBy(*keys).agg(*[F.expr(e) for e in exprs])
+
+
+def _sums() -> list[str]:
+    return [f"sum(`{c}`) AS `{c}`" for c in STATUS_COLS]
+
+
 def observed_days(report: DataFrame) -> DataFrame:
     """O11 — days with at least one capture, pruned to the count columns."""
-    return report.filter(F.col("All") != 0).select(
+    return report.filter("`All` != 0").select(
         "url", "Day", "Datetime", "2xx", "3xx", "4xx", "5xx", "All"
     )
 
@@ -30,72 +50,52 @@ def observed_days(report: DataFrame) -> DataFrame:
 def monthly_rollup(report: DataFrame) -> DataFrame:
     """O23 — per-url monthly sums; the month is keyed to its 15th day
     (``Day[:8] + '15'``, main.py:384)."""
-    orig = observed_days(report)
-    month = F.concat(F.substring("Day", 1, 8), F.lit("15")).alias("Month")
-    return orig.groupBy("url", month).agg(
-        *[F.sum(c).alias(c) for c in STATUS_COLS]
-    )
+    month = F.expr("concat(substring(Day, 1, 8), '15') AS Month")
+    return _agg(observed_days(report), ["url", month], _sums())
 
 
 def totals(report: DataFrame) -> DataFrame:
     """O25 — per-url column totals over observed days, long form."""
-    orig = observed_days(report)
-    wide = orig.groupBy("url").agg(*[F.sum(c).alias(c) for c in STATUS_COLS])
+    wide = _agg(observed_days(report), ["url"], _sums())
     stack = ", ".join(f"'{c}', `{c}`" for c in STATUS_COLS)
     return wide.selectExpr("url", f"stack({len(STATUS_COLS)}, {stack}) as (Status, Total)")
 
 
 def summary_stats(report: DataFrame) -> DataFrame:
     """O24 — pandas-describe equivalents per status column over non-zero
-    days (zero counts become NULL first — O13), transposed to one row per
-    Status. std of a single observation is 0 (reference replaces NaN)."""
-    orig = observed_days(report)
-    pieces = []
-    for c in STATUS_COLS:
-        v = F.when(F.col(c) != 0, F.col(c)).otherwise(F.lit(None)).cast("double")
-        pieces.append(
-            orig.select("url", v.alias("v"))
-            .filter(F.col("v").isNotNull())
-            .groupBy("url")
-            .agg(
-                F.count("v").alias("count"),
-                F.avg("v").alias("mean"),
-                F.coalesce(F.stddev_samp("v"), F.lit(0.0)).alias("std"),
-                F.min("v").cast("long").alias("min"),
-                F.expr("percentile(v, 0.25)").alias("q1"),
-                F.expr("percentile(v, 0.5)").alias("median"),
-                F.expr("percentile(v, 0.75)").alias("q3"),
-                F.max("v").cast("long").alias("max"),
-            )
-            .withColumn("Status", F.lit(c))
-        )
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
-    return out.select(
-        "url", "Status", "count", "mean", "std", "min", "q1", "median", "q3", "max"
-    )
+    days (zero counts become NULL first — O13), one row per (url,
+    Status) with at least one non-zero day. std of a single observation
+    is 0 (reference replaces NaN)."""
+    # inline, not stack: stack would make Status nullable
+    rows = ", ".join(f"named_struct('Status', '{c}', 'v', CAST(`{c}` AS DOUBLE))" for c in STATUS_COLS)
+    values = observed_days(report).selectExpr("url", f"inline(array({rows}))").filter("v != 0")
+    return _agg(values, ["url", "Status"], [
+        "count(v) AS `count`",
+        "avg(v) AS mean",
+        "coalesce(stddev_samp(v), 0.0) AS std",
+        "CAST(min(v) AS BIGINT) AS `min`",
+        "percentile(v, 0.25) AS q1",
+        "percentile(v, 0.5) AS median",
+        "percentile(v, 0.75) AS q3",
+        "CAST(max(v) AS BIGINT) AS `max`",
+    ])
 
 
 def content_value_counts(report: DataFrame) -> DataFrame:
     """O26 — fixity breakdown: count of days per Content state."""
-    return (
-        report.groupBy("url", "Content")
-        .agg(F.count(F.lit(1)).alias("Count"))
-        .orderBy("url", "Content")
-    )
+    return _agg(report, ["url", "Content"], ["count(1) AS Count"]).orderBy("url", "Content")
 
 
 def specimen_breakdown(report: DataFrame) -> DataFrame:
     """O27 — Active / Filled / Missing day counts per url."""
-    agg = report.groupBy("url").agg(
-        F.sum((F.col("All") != 0).cast("long")).alias("Active"),
-        F.sum(F.col("Filled").cast("long")).alias("Filled"),
-        F.count(F.lit(1)).alias("_n"),
-    )
-    wide = agg.withColumn("Missing", F.col("_n") - F.col("Active") - F.col("Filled")).drop("_n")
+    wide = _agg(report, ["url"], [
+        "sum(CAST(`All` != 0 AS BIGINT)) AS Active",
+        "sum(CAST(Filled AS BIGINT)) AS Filled",
+        "count(1) AS _n",
+    ])
     return wide.selectExpr(
-        "url", "stack(3, 'Active', Active, 'Filled', Filled, 'Missing', Missing) as (Specimen, Days)"
+        "url",
+        "stack(3, 'Active', Active, 'Filled', Filled, 'Missing', _n - Active - Filled) as (Specimen, Days)",
     )
 
 
@@ -108,13 +108,12 @@ def chaos_melt(report: DataFrame) -> DataFrame:
 
 def first_last_capture(report: DataFrame) -> DataFrame:
     """O41 — first and last observed capture day + datetime per url."""
-    orig = observed_days(report)
-    return orig.groupBy("url").agg(
-        F.min_by("Day", "Day").alias("first_day"),
-        F.min_by("Datetime", "Day").alias("first_datetime"),
-        F.max_by("Day", "Day").alias("last_day"),
-        F.max_by("Datetime", "Day").alias("last_datetime"),
-    )
+    return _agg(observed_days(report), ["url"], [
+        "min_by(Day, Day) AS first_day",
+        "min_by(Datetime, Day) AS first_datetime",
+        "max_by(Day, Day) AS last_day",
+        "max_by(Datetime, Day) AS last_datetime",
+    ])
 
 
 def headline_metrics(report: DataFrame, as_of_day: str | None = None) -> DataFrame:
@@ -123,45 +122,35 @@ def headline_metrics(report: DataFrame, as_of_day: str | None = None) -> DataFra
     captures (mmct), ok ratio, span (days + humanized), inactivity days
     vs ``as_of_day`` (default: each url's last spine day), gap/filled
     counts, last/prev resilience, last fixity, changed ratio, last
-    chaos/chaosn.
+    chaos/chaosn. ``_rn`` numbers a url's days newest-first: the last
+    day's values are the ``max_by`` over ``-_rn``, the previous day's
+    resilience the one at ``_rn = 2`` (0.5 when the url has a single
+    day).
     """
-    w = Window.partitionBy("url").orderBy("Day")
-    ranked = report.withColumn("_rn_desc", F.row_number().over(
-        Window.partitionBy("url").orderBy(F.col("Day").desc())
-    ))
-    last_rows = ranked.filter(F.col("_rn_desc") <= 2).groupBy("url").agg(
-        F.max_by("Resilience", F.lit(1) - F.col("_rn_desc")).alias("last_resilience"),
-        F.min_by("Resilience", F.lit(1) - F.col("_rn_desc")).alias("_maybe_prev"),
-        F.count(F.lit(1)).alias("_tail_n"),
-        F.max_by("Fixity", F.lit(1) - F.col("_rn_desc")).alias("last_fixity"),
-        F.max_by("Chaos", F.lit(1) - F.col("_rn_desc")).alias("last_chaos"),
-        F.max_by("Chaosn", F.lit(1) - F.col("_rn_desc")).alias("last_chaosn"),
-        F.max_by("Specimen", F.lit(1) - F.col("_rn_desc")).alias("last_specimen"),
-    ).withColumn(
+    ranked = report.selectExpr("*", "row_number() OVER (PARTITION BY url ORDER BY Day DESC) AS _rn")
+    last = [f"max_by({c}, -_rn) AS last_{c.lower()}"
+            for c in ("Resilience", "Fixity", "Chaos", "Chaosn", "Specimen")]
+    wide = _agg(ranked, ["url"], [
+        "sum(`All`) AS captures",
+        "sum(`2xx`) AS _ok",
+        "count(1) AS span_days",
+        "max(CASE WHEN `All` != 0 THEN Day END) AS last_observed_day",
+        "max(Day) AS spine_end",
+        "sum(CAST(`All` = 0 AS BIGINT)) AS gaps",
+        "sum(CAST(Filled AS BIGINT)) AS filled",
+        "sum(CAST(Content = 'Changed' AS BIGINT)) AS changed_days",
+        "sum(CAST(`All` != 0 AS BIGINT)) AS active_days",
+        *last,
+        "CASE WHEN count(1) > 1 THEN max_by(Resilience, CASE WHEN _rn <= 2 THEN _rn END) "
+        "ELSE 0.5 END AS prev_resilience",
+    ])
+    end = f"'{as_of_day}'" if as_of_day else "spine_end"
+    return wide.selectExpr(
+        "url", "captures", "span_days", "last_observed_day", "gaps", "filled", "changed_days",
+        "active_days", "_ok / nullif(captures, 0) AS ok_ratio",
+        f"{ymd_spark_sql('span_days')} AS span_human",
+        f"datediff({end}, last_observed_day) AS inactive_days",
+        "changed_days / nullif(active_days, 0) AS changed_ratio",
+        "last_resilience", "last_fixity", "last_chaos", "last_chaosn", "last_specimen",
         "prev_resilience",
-        F.when(F.col("_tail_n") > 1, F.col("_maybe_prev")).otherwise(F.lit(0.5)),
-    ).drop("_maybe_prev", "_tail_n")
-
-    base = report.groupBy("url").agg(
-        F.sum("All").alias("captures"),
-        F.sum("2xx").alias("_ok"),
-        F.count(F.lit(1)).alias("span_days"),
-        F.max(F.when(F.col("All") != 0, F.col("Day"))).alias("last_observed_day"),
-        F.max("Day").alias("spine_end"),
-        F.sum((F.col("All") == 0).cast("long")).alias("gaps"),
-        F.sum(F.col("Filled").cast("long")).alias("filled"),
-        F.sum((F.col("Content") == "Changed").cast("long")).alias("changed_days"),
-        F.sum((F.col("All") != 0).cast("long")).alias("active_days"),
     )
-    end = F.lit(as_of_day) if as_of_day else F.col("spine_end")
-    out = (
-        base.withColumn("ok_ratio", F.col("_ok") / F.nullif(F.col("captures"), F.lit(0)))
-        .withColumn("span_human", ymd(F.col("span_days")))
-        .withColumn("inactive_days", F.datediff(end, F.col("last_observed_day")))
-        .withColumn(
-            "changed_ratio",
-            F.col("changed_days") / F.nullif(F.col("active_days"), F.lit(0)),
-        )
-        .drop("_ok", "spine_end")
-    )
-    return out.join(last_rows, "url")

@@ -12,10 +12,9 @@ UDF, scales to any number of urls.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from trendmachine_spark.functions.scalars import day_date, day_string, digest8, status_class
+from trendmachine_spark.functions.scalars import day_date_sql, day_string_sql, digest8_sql, status_class_sql
 
 
 def normalize_captures(captures: DataFrame) -> DataFrame:
@@ -25,29 +24,20 @@ def normalize_captures(captures: DataFrame) -> DataFrame:
     status class), digest (8-char). Capture order within a url is
     (ts, seq) — sortedness of the source is never assumed.
     """
-    c = (
-        captures
-        .withColumn("day", day_date(F.col("ts")))
-        .withColumn("day_str", day_string(F.col("ts")))
-        .withColumn("cls_raw", status_class(F.col("status")))
+    c = captures.selectExpr(
+        "url", "seq", "ts", "digest",
+        f"{day_date_sql('ts')} AS day",
+        f"{day_string_sql('ts')} AS day_str",
+        f"{status_class_sql('status')} AS cls_raw",
     )
     # Revisit resolution (O9): '-' rows inherit the most recent class
     # previously recorded for the same (url, full-digest); default '~'.
     # Non-'-' rows contribute their own class to the running state.
-    w = (
-        Window.partitionBy("url", "digest")
-        .orderBy("ts", "seq")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    resolved = (
+        "CASE WHEN cls_raw = '-' THEN coalesce(last(CASE WHEN cls_raw != '-' THEN cls_raw END, true) "
+        "OVER (PARTITION BY url, digest ORDER BY ts, seq "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), '~') ELSE cls_raw END"
     )
-    resolved = F.when(
-        F.col("cls_raw") == "-",
-        F.coalesce(
-            F.last(F.when(F.col("cls_raw") != "-", F.col("cls_raw")), ignorenulls=True).over(w),
-            F.lit("~"),
-        ),
-    ).otherwise(F.col("cls_raw"))
-    return (
-        c.withColumn("cls", resolved)
-        .withColumn("digest", digest8(F.col("digest")))
-        .select("url", "seq", "ts", "day", "day_str", "cls", "digest")
+    return c.selectExpr(
+        "url", "seq", "ts", "day", "day_str", f"{resolved} AS cls", f"{digest8_sql('digest')} AS digest"
     )

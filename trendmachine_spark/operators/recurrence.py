@@ -11,23 +11,27 @@ key's (shift, slope, spread). Each run's base depends on the previous
 run's *final* value, so the dependency chain is sequential per url —
 not window-expressible — but urls are independent.
 
-Execution shape (r14, third iteration): a STREAMING ``mapInPandas``
-over ``repartition(P, "url").sortWithinPartitions("url", "day")``.
-The r13 grouped map keyed by raw url paid a measured ~2 ms of pure
-Arrow/pandas machinery PER GROUP (one batch + one frame per url); the
-first r14 bucketed form cut the group count but (a) AQE coalesced the
-small-byte exchange to ONE task — Python compute is invisible to its
-byte-based advisory — and (b) still paid the per-group constant per
-bucket. Streaming fixes both: the explicit partition count on the url
-exchange can't be coalesced away, and each task processes its whole
-partition as a handful of large Arrow batches (per-BATCH overhead
-only), carrying the tiny recurrence state (active url/key, base,
-scale, x offset, last h) across batch boundaries. Bit-exactness does
-not depend on where batches split: every element's formula sees the
-same base/scale/x regardless (pinned by the batch/partition-invariance
-tests). Measured, value-identical, sf0.1 / x10 best: per-url grouped
-map 0.96 / 3.77 s, bucketed grouped map 1.42 / 1.46 s, streaming
-0.43 / 0.95 s (tools/exp_recurrence_stream.py).
+Execution shape: a STREAMING ``mapInPandas`` over
+``repartition(P, "url").sortWithinPartitions("url", "day")``. Each task
+processes its whole partition as a handful of large Arrow batches
+(per-BATCH overhead only, not per url), carrying the tiny recurrence
+state (active url/key, base, scale, x offset, last h) across batch
+boundaries. Bit-exactness does not depend on where batches split: every
+element's formula sees the same base/scale/x regardless (pinned by the
+batch/partition-invariance tests).
+
+The url repartition is not always an exchange of its own. The planner
+(``EnsureRequirements``) drops a user repartition whose child is already
+hash-partitioned on url into the same number of partitions. In
+``pipeline.daily_series`` the dense series leaves the rollup's url
+windows hash-partitioned on url into ``spark.sql.shuffle.partitions``
+partitions, so whenever that setting is >= 8 the repartition is dropped
+and the recurrence runs in the partitions of that upstream exchange.
+That exchange is an ENSURE_REQUIREMENTS one, which AQE coalesces by its
+byte size: a small multi-url series is scored in ONE Python task (the
+perfbench bulk report, 327,387 dense rows of 201 urls, is). Only when
+the child is partitioned otherwise does the repartition stand, as a
+REPARTITION_BY_NUM exchange whose partition count AQE keeps.
 
 Within a run the curve is vectorized with numpy (the reference loops
 day-at-a-time in Python; we only pay Python per *run*).
@@ -51,11 +55,11 @@ def _param_table(sigparams) -> dict[str, tuple[float, float, float]]:
 
 
 def _partition_count(df: DataFrame) -> int:
-    """Scale-adaptive parallelism for the url exchange: the session's
-    shuffle parallelism (data-sized in bench/prod sessions), floor 8.
-    Explicit on purpose — an ENSURE_REQUIREMENTS exchange here gets
-    AQE-coalesced to ~1 task on byte estimates, serializing the Python
-    stage (measured: 1 task at sf0.1 AND x10 under the bench confs)."""
+    """Partition count of the url repartition: the session's shuffle
+    parallelism, floor 8. AQE never coalesces the repartition when it
+    stands as an exchange of its own; it is dropped when the child is
+    already hash-partitioned on url into this many partitions (module
+    docstring)."""
     try:
         target = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     except Exception:  # absent/non-integer setting or Connect quirk

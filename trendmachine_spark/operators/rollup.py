@@ -4,8 +4,8 @@ Covers SURVEY.md §2 operators O17 (All), O19 (daily pivot counts), O20
 (specimen arg-max by priority), O21 (chaos / chaosn), O22 (content
 change detection).
 
-Reference semantics (main.py:129-183) re-expressed as one window pass +
-one hash aggregation:
+Reference semantics (main.py:129-183) re-expressed as windows over each
+url's captures, one (url, day) aggregation and one window over the days:
 
 * counts: conditional sums per status class; unknown classes are counted
   nowhere (DailyRecord.incr swallows them, archive.py:51-56) but still
@@ -27,17 +27,14 @@ one hash aggregation:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from trendmachine_spark.params import STATUS_PRIORITY, SWS
 
-
-def _priority(cls) -> Column:
-    expr = F.lit(0)
-    for k, v in STATUS_PRIORITY.items():
-        expr = F.when(cls == k, F.lit(v)).otherwise(expr)
-    return expr
+#: specimen priority of a status class; unknown classes rank 0
+_PRIORITY = "CASE {} ELSE 0 END".format(
+    " ".join(f"WHEN cls = '{k}' THEN {v}" for k, v in STATUS_PRIORITY.items()))
 
 
 def daily_rollup(normalized: DataFrame, with_chaos: bool = True) -> DataFrame:
@@ -47,76 +44,39 @@ def daily_rollup(normalized: DataFrame, with_chaos: bool = True) -> DataFrame:
     datetime, digest, content[, chaos, chaosn].
     """
     c = normalized
-    worder = Window.partitionBy("url").orderBy("ts", "seq")
-
+    w = "PARTITION BY url ORDER BY ts, seq"
     if with_chaos:
-        # O21 — run-change flag over the url's full capture stream.
-        chg = (
-            F.col("cls") != F.coalesce(F.lag("cls").over(worder), F.lit("~"))
-        ).cast("long")
-        rn = F.row_number().over(worder)
-        cum = Window.partitionBy("url").orderBy("ts", "seq").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        # SWS-1 transitions = the internal boundaries of SWS rows (see
-        # module docstring for the eviction off-by-one)
-        sliding = Window.partitionBy("url").orderBy("ts", "seq").rowsBetween(
-            -(SWS - 2), Window.currentRow
-        )
-        c = (
-            c.withColumn("_chg", chg)
-            .withColumn("_rn", rn)
-            .withColumn("_chaos", F.sum("_chg").over(cum) / F.col("_rn"))
-            .withColumn(
-                "_chaosn",
-                F.sum("_chg").over(sliding) / F.least(F.lit(SWS), F.col("_rn")),
-            )
+        # O21 — run-change flag over the url's full capture stream; the
+        # sliding frame is SWS-1 transitions = the internal boundaries
+        # of SWS rows (see module docstring for the eviction off-by-one)
+        c = c.selectExpr(
+            "*",
+            f"CAST(cls != coalesce(lag(cls) OVER ({w}), '~') AS BIGINT) AS _chg",
+            f"row_number() OVER ({w}) AS _rn",
+        ).selectExpr(
+            "*",
+            f"sum(_chg) OVER ({w} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) / _rn AS _chaos",
+            f"sum(_chg) OVER ({w} ROWS BETWEEN {SWS - 2} PRECEDING AND CURRENT ROW) / least({SWS}, _rn) AS _chaosn",
         )
 
     # Arg-max ordering key: highest priority, then earliest (ts, seq).
     # ts is a 14-digit string => numeric negation gives the reversal.
-    order_key = F.struct(
-        _priority(F.col("cls")).alias("pr"),
-        (-F.col("ts").cast("long")).alias("nts"),
-        (-F.col("seq")).alias("nseq"),
-    )
-    payload = F.struct(
-        F.col("ts").alias("datetime"),
-        F.col("digest").alias("digest"),
-        F.col("cls").alias("specimen"),
-    )
-    aggs = [
-        F.sum((F.col("cls") == "2xx").cast("long")).alias("_2xx"),
-        F.sum((F.col("cls") == "3xx").cast("long")).alias("_3xx"),
-        F.sum((F.col("cls") == "4xx").cast("long")).alias("_4xx"),
-        F.sum((F.col("cls") == "5xx").cast("long")).alias("_5xx"),
-        F.max_by(payload, order_key).alias("_spec"),
-    ]
+    aggs = [f"sum(CAST(cls = '{k}' AS BIGINT)) AS _{k}" for k in ("2xx", "3xx", "4xx", "5xx")]
+    aggs.append(
+        "max_by(named_struct('datetime', ts, 'digest', digest, 'specimen', cls), "
+        f"named_struct('pr', {_PRIORITY}, 'nts', -CAST(ts AS BIGINT), 'nseq', -seq)) AS _spec")
     if with_chaos:
-        close_key = F.struct(F.col("ts").cast("long").alias("ts"), F.col("seq").alias("seq"))
-        aggs += [
-            F.max_by("_chaos", close_key).alias("chaos"),
-            F.max_by("_chaosn", close_key).alias("chaosn"),
-        ]
-    d = (
-        c.groupBy("url", "day", "day_str")
-        .agg(*aggs)
-        .withColumn("all", F.col("_2xx") + F.col("_3xx") + F.col("_4xx") + F.col("_5xx"))
-        .withColumn("specimen", F.col("_spec.specimen"))
-        .withColumn("datetime", F.col("_spec.datetime"))
-        .withColumn("digest", F.col("_spec.digest"))
-        .drop("_spec")
-    )
+        close_key = "named_struct('ts', CAST(ts AS BIGINT), 'seq', seq)"
+        aggs += [f"max_by(_chaos, {close_key}) AS chaos", f"max_by(_chaosn, {close_key}) AS chaosn"]
+    chaos = ["chaos", "chaosn"] if with_chaos else []
+    d = c.groupBy("url", "day", "day_str").agg(*[F.expr(a) for a in aggs]).selectExpr(
+        "url", "day", "day_str", "_2xx", "_3xx", "_4xx", "_5xx",
+        "_2xx + _3xx + _4xx + _5xx AS `all`",
+        "_spec.specimen AS specimen", "_spec.datetime AS datetime", "_spec.digest AS digest", *chaos)
 
     # O22 — content change vs previous *observed* day's specimen digest.
-    wday = Window.partitionBy("url").orderBy("day")
-    prev_digest = F.coalesce(F.lag("digest").over(wday), F.lit("~"))
-    d = d.withColumn(
-        "content",
-        F.when(F.col("digest") == prev_digest, "Unchanged").otherwise("Changed"),
-    )
-    cols = ["url", "day", "day_str", "_2xx", "_3xx", "_4xx", "_5xx", "all",
-            "specimen", "datetime", "digest", "content"]
-    if with_chaos:
-        cols += ["chaos", "chaosn"]
-    return d.select(*cols)
+    return d.selectExpr(
+        "url", "day", "day_str", "_2xx", "_3xx", "_4xx", "_5xx", "`all`", "specimen", "datetime", "digest",
+        "CASE WHEN digest = coalesce(lag(digest) OVER (PARTITION BY url ORDER BY day), '~') "
+        "THEN 'Unchanged' ELSE 'Changed' END AS content",
+        *chaos)

@@ -4,17 +4,35 @@ Covers SURVEY.md §2 operators O31 (date spine), O33 (chaos ffill), O40
 (union of observed + filled days).
 
 The reference builds the spine as ``pd.date_range(first_day, today)``
-with dict point-lookups (main.py:199-207). Spark-first: per-url
-``sequence()`` + ``explode`` left-joined onto the daily table. ``today``
-becomes an explicit ``as_of`` date so results are deterministic.
+with dict point-lookups (main.py:199-207); ``today`` is an explicit
+``as_of`` date here so results are deterministic.
+
+Shape: no join, no second pass over the captures and, without gap
+filling, no window of its own. Every observed (or gap-filled) row on or
+before ``as_of`` explodes forward over the days up to the day before the
+url's next row (``lead(day)`` over (url, day)), or up to ``as_of`` for
+the url's last row. The row keeps its own day; each day after it gets
+the DailyRecord defaults and the row's chaos, which is the forward fill.
+The ``lead`` runs in the rollup's own (url, day) window operator (the
+content window), on the rollup's url partitioning, so densify adds no
+exchange; gap filling adds one window for the running chaos of the
+filled rows. A url whose first row falls after ``as_of`` yields no rows,
+as ``pd.date_range(first, today)`` does when ``first > today``.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+#: (column, value on a day no row covers: the DailyRecord defaults,
+#: archive.py:4-20); chaos and chaosn are carried instead
+_DEFAULTS = (
+    ("_2xx", "0"), ("_3xx", "0"), ("_4xx", "0"), ("_5xx", "0"), ("`all`", "0"),
+    ("specimen", "'~'"), ("datetime", "'~'"), ("digest", "'~'"), ("content", "'Unknown'"),
+)
 
 
 def resolve_as_of(daily: DataFrame, as_of: _dt.date | str | None) -> _dt.date:
@@ -32,66 +50,40 @@ def densify(daily: DataFrame, filled: DataFrame | None, as_of: _dt.date) -> Data
 
     ``filled`` carries (url, day, specimen) synthesized by the gap
     filler; its rows only ever land on days absent from ``daily``
-    (interior gap days), so a left join against the union is safe.
-    Missing days default to the DailyRecord defaults (archive.py:4-20):
-    specimen '~', digest '~', datetime '~', content 'Unknown', counts 0.
-    Chaos values forward-fill from the previous observed day
-    (main.py:202-207); before any observed day they are 0.0.
+    (interior gap days). A filled row keeps its specimen and takes the
+    defaults otherwise. Chaos values forward-fill from the previous
+    observed day (main.py:202-207): a filled row and every day a row
+    does not cover carry the chaos of the last observed day before it.
     """
-    observed = daily
+    as_of_sql = f"DATE'{as_of.isoformat()}'"
+    rows = daily
+    carried = "chaos", "chaosn"
     if filled is not None:
-        filled_full = filled.select(
-            "url",
-            "day",
-            F.date_format("day", "yyyy-MM-dd").alias("day_str"),
-            F.lit(0).cast("long").alias("_2xx"),
-            F.lit(0).cast("long").alias("_3xx"),
-            F.lit(0).cast("long").alias("_4xx"),
-            F.lit(0).cast("long").alias("_5xx"),
-            F.lit(0).cast("long").alias("all"),
-            F.col("specimen"),
-            F.lit("~").alias("datetime"),
-            F.lit("~").alias("digest"),
-            F.lit("Unknown").alias("content"),
-            F.lit(None).cast("double").alias("chaos"),
-            F.lit(None).cast("double").alias("chaosn"),
-        )
-        observed = observed.unionByName(filled_full)
-
-    spine = (
-        daily.groupBy("url")
-        .agg(F.min("day").alias("_first"))
-        .select(
-            "url",
-            F.explode(
-                F.sequence(F.col("_first"), F.lit(as_of), F.expr("interval 1 day"))
-            ).alias("day"),
-        )
-    )
-    dense = (
-        spine.join(observed, ["url", "day"], "left")
-        .withColumn("day_str", F.coalesce("day_str", F.date_format("day", "yyyy-MM-dd")))
-        .withColumn("specimen", F.coalesce("specimen", F.lit("~")))
-        .withColumn("datetime", F.coalesce("datetime", F.lit("~")))
-        .withColumn("digest", F.coalesce("digest", F.lit("~")))
-        .withColumn("content", F.coalesce("content", F.lit("Unknown")))
-    )
-    for c in ("_2xx", "_3xx", "_4xx", "_5xx", "all"):
-        dense = dense.withColumn(c, F.coalesce(c, F.lit(0)))
-
-    # O33 — chaos forward-fill: a null-based running last() reproduces
-    # the reference's falsy check. NB equivalence does NOT require
-    # observed chaos > 0: an all-revisit url can close a day at 0.0, but
-    # then the reference's falsy forward-fill also propagates 0.0, so
-    # carrying the explicit 0.0 forward yields the same series.
-    wff = (
-        Window.partitionBy("url")
-        .orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    dense = (
-        dense.withColumn("chaos", F.coalesce(F.last("chaos", ignorenulls=True).over(wff), F.lit(0.0)))
-        .withColumn("chaosn", F.coalesce(F.last("chaosn", ignorenulls=True).over(wff), F.lit(0.0)))
-        .withColumn("filled", (F.col("specimen") != "~") & (F.col("all") == 0))
-    )
-    return dense
+        rows = rows.unionByName(filled.selectExpr(
+            "url", "day", "date_format(day, 'yyyy-MM-dd') AS day_str",
+            "0L AS _2xx", "0L AS _3xx", "0L AS _4xx", "0L AS _5xx", "0L AS `all`", "specimen",
+            "'~' AS datetime", "'~' AS digest", "'Unknown' AS content",
+            "CAST(NULL AS DOUBLE) AS chaos", "CAST(NULL AS DOUBLE) AS chaosn"))
+        # O33 — a null-based running last() reproduces the reference's
+        # falsy check. NB equivalence does NOT require observed chaos >
+        # 0: an all-revisit url can close a day at 0.0, but then the
+        # reference's falsy forward-fill also propagates 0.0, so carrying
+        # the explicit 0.0 forward yields the same series.
+        carried = tuple(
+            f"last({c}, true) OVER (PARTITION BY url ORDER BY day "
+            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)" for c in carried)
+    # the window sees the rows after as_of too, hence the cap (least
+    # skips the NULL lead of a url's last row); filtering after it keeps
+    # it in the rollup's own (url, day) window operator
+    spans = rows.selectExpr(
+        "*",
+        f"least(date_sub(lead(day) OVER (PARTITION BY url ORDER BY day), 1), {as_of_sql}) AS _end",
+        f"{carried[0]} AS _chaos", f"{carried[1]} AS _chaosn",
+    ).filter(f"day <= {as_of_sql}").selectExpr(
+        "*", "posexplode(sequence(day, _end, INTERVAL 1 DAY)) AS (_k, _day)")
+    return spans.selectExpr(
+        "url", "_day AS day",
+        "coalesce(CASE WHEN _k = 0 THEN day_str END, date_format(_day, 'yyyy-MM-dd')) AS day_str",
+        *[f"coalesce(CASE WHEN _k = 0 THEN {c} END, {v}) AS {c}" for c, v in _DEFAULTS],
+        "coalesce(_chaos, 0.0) AS chaos", "coalesce(_chaosn, 0.0) AS chaosn",
+    ).selectExpr("*", "specimen != '~' AND `all` = 0 AS filled")

@@ -20,10 +20,12 @@ kept — same stance as the unknown-specimen divergence in SURVEY §2.5.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from trendmachine_spark.params import TRANSITION_CLASSES
+
+_CELLS = [(i, s, j, t) for i, s in enumerate(TRANSITION_CLASSES) for j, t in enumerate(TRANSITION_CLASSES)]
 
 
 def transition_matrix(dense_daily: DataFrame, dense_cells: bool = True) -> DataFrame:
@@ -37,34 +39,19 @@ def transition_matrix(dense_daily: DataFrame, dense_cells: bool = True) -> DataF
     filter-then-lag, but keeps every row so no url is lost), and the
     16 cells are conditional counts in a ``groupBy(url)`` that reuses
     the window's url hash-partitioning (HashAggregate, no new Exchange)
-    — then a narrow ``stack`` to the dense long form. This replaces the
-    round-1 shape (filtered lag + a second (url,src,tgt) shuffle + a
-    ``urls.distinct()`` re-scan left-joined against broadcast cells).
+    — then a narrow ``stack`` to the dense long form. Every expression
+    is Spark SQL text, so the plan builds in a handful of calls.
     """
-    w = (
-        Window.partitionBy("url")
-        .orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    valid = "specimen IN ({})".format(", ".join(f"'{c}'" for c in TRANSITION_CLASSES))
+    rows = dense_daily.selectExpr(
+        "url", "specimen",
+        f"last(CASE WHEN {valid} THEN specimen END, true) OVER (PARTITION BY url ORDER BY day "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev",
     )
-    valid = F.col("specimen").isin(*TRANSITION_CLASSES)
-    rows = dense_daily.select("url", "day", "specimen").withColumn(
-        "prev", F.last(F.when(valid, F.col("specimen")), ignorenulls=True).over(w)
-    )
-    aggs = [
-        F.count(
-            F.when(valid & (F.col("prev") == s) & (F.col("specimen") == t), True)
-        ).alias(f"_c{i}_{j}")
-        for i, s in enumerate(TRANSITION_CLASSES)
-        for j, t in enumerate(TRANSITION_CLASSES)
-    ]
-    wide = rows.groupBy("url").agg(*aggs)
-    stack_expr = "stack({}, {}) as (Source, Target, Count)".format(
-        len(TRANSITION_CLASSES) ** 2,
-        ", ".join(
-            f"'{s}', '{t}', _c{i}_{j}"
-            for i, s in enumerate(TRANSITION_CLASSES)
-            for j, t in enumerate(TRANSITION_CLASSES)
-        ),
-    )
-    out = wide.selectExpr("url", stack_expr)
-    return out if dense_cells else out.filter(F.col("Count") > 0)
+    wide = rows.groupBy("url").agg(*[
+        F.expr(f"count(CASE WHEN {valid} AND prev = '{s}' AND specimen = '{t}' THEN true END) AS _c{i}_{j}")
+        for i, s, j, t in _CELLS
+    ])
+    stack = ", ".join(f"'{s}', '{t}', _c{i}_{j}" for i, s, j, t in _CELLS)
+    out = wide.selectExpr("url", f"stack({len(_CELLS)}, {stack}) as (Source, Target, Count)")
+    return out if dense_cells else out.filter("Count > 0")

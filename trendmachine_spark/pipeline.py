@@ -12,9 +12,8 @@ from __future__ import annotations
 import datetime as _dt
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from trendmachine_spark.functions.scalars import urim
+from trendmachine_spark.functions.scalars import urim_sql
 from trendmachine_spark.operators.fill import gap_fill
 from trendmachine_spark.operators.normalize import normalize_captures
 from trendmachine_spark.operators.recurrence import score_daily_series
@@ -83,22 +82,10 @@ def daily_series(
 
 def report_projection(scored: DataFrame) -> DataFrame:
     """Canonical report-column projection over a scored dense series."""
-    return scored.select(
-        "url",
-        F.col("day_str").alias("Day"),
-        F.col("datetime").alias("Datetime"),
-        F.col("_2xx").alias("2xx"),
-        F.col("_3xx").alias("3xx"),
-        F.col("_4xx").alias("4xx"),
-        F.col("_5xx").alias("5xx"),
-        F.col("all").alias("All"),
-        F.col("specimen").alias("Specimen"),
-        F.col("filled").alias("Filled"),
-        F.col("resilience").alias("Resilience"),
-        F.col("digest").alias("Digest"),
-        F.col("content").alias("Content"),
-        F.col("fixity").alias("Fixity"),
-        F.col("chaos").alias("Chaos"),
-        F.col("chaosn").alias("Chaosn"),
-        urim(F.col("datetime"), F.col("url")).alias("URIM"),
+    return scored.selectExpr(
+        "url", "day_str AS Day", "datetime AS Datetime",
+        "_2xx AS `2xx`", "_3xx AS `3xx`", "_4xx AS `4xx`", "_5xx AS `5xx`", "`all` AS `All`",
+        "specimen AS Specimen", "filled AS Filled", "resilience AS Resilience", "digest AS Digest",
+        "content AS Content", "fixity AS Fixity", "chaos AS Chaos", "chaosn AS Chaosn",
+        f"{urim_sql('datetime', 'url')} AS URIM",
     )

@@ -513,7 +513,7 @@ def q_urim_projection(spark, sf_dir):
     d = _daily(spark, sf_dir)
     return d.select(
         "url", F.col("day_str").alias("day"),
-        urim(F.col("datetime"), F.col("url")).alias("urim"),
+        urim("datetime", "url").alias("urim"),
     )
 
 
@@ -562,7 +562,7 @@ def q_headline_metrics(spark, sf_dir):
         "url", "captures", "span_days", "last_observed_day", "gap_days",
         "changed_days", "active_days",
         (F.col("_ok").cast("double") / F.col("captures")).alias("ok_ratio"),
-        ymd(F.col("span_days")).alias("span_human"),
+        ymd("span_days").alias("span_human"),
         F.datediff(
             F.to_date("_spine_end"), F.to_date("last_observed_day")
         ).cast("long").alias("inactive_days"),

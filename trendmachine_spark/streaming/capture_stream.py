@@ -45,7 +45,7 @@ def daily_capture_counts(stream: DataFrame, watermark: str = "1 day") -> DataFra
     ``stream`` needs url, event_time (timestamp), status. Late rows
     inside the watermark update their day's counts; later ones drop.
     """
-    cls = status_class(F.col("status"))
+    cls = status_class("status")
     return (
         stream.withWatermark("event_time", watermark)
         .groupBy("url", F.window("event_time", "1 day").alias("day_window"))
