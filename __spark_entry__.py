@@ -6,58 +6,29 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 insensitive value-hash -> CORRECTNESS_r{N}.json).
 
 The real surface lives in ``trendmachine_spark.registry``: 149 named
-queries covering SURVEY.md §2's operator inventory (capture pipeline,
-dashboard aggregates) plus the §2.6 extension operators (dedup incl.
-end-to-end clustering, segment/semantic/incremental dedup, containment,
-sketch-accuracy, similarity search, text analysis, tokenizer-training
-inputs, chunking, corpus reporting/cards, multimodal incl. REAL
-in-sandbox BMP/WAV byte-level decode, mixing/packing, quality scoring)
-and relational/event-analytics queries (funnel, retention,
-sessionization + duration histograms, temporal joins, JSON extraction,
-moving averages, CUBE margins; round 4 adds exact-substring dedup —
-report + destructive strip; round 5 adds the lsh_bucket_health
-no-silent-caps metric and the watermarked stateful streaming
-near-dup twin; round 6 adds the win=5 fine-grained substring audit
-justified by the natural-text window sweep; round 7 adds the
-bounded suffix-array pass — per-position exact duplicated-span
-lengths, histogram, and guard stats, real pure-stdlib PNG decode,
-the trained-logistic quality score, the full iterative BPE
-merge-training loop with its segmented vocabulary, the held-out
-bigram-LM familiarity score, destructive PII redaction, and the
-md5-mod output-shard manifest; round 8 applies the trained BPE merge
-table to the corpus itself — per-doc token accounting — adds true
-add-one surprisal to the LM familiarity score, and drives the PII
-redaction paths end-to-end via a deterministically planted corpus
-twin; round 10 adds deterministic train/valid/test split assignment,
-the opening-8-gram split-contamination report, last-touch
-conversion attribution, perceptual image hashing (aHash/dHash over
-REAL decoded pixels) with exact-family and banded hamming near-dup
-image dedup, acoustic summary features over REAL decoded PCM, and
-per-modality dedup completion — audio energy-profile fingerprint
-families and video sampled-frame-signature families; round 11 gives
-video its REAL decode: MJPEG-container clips of exact-roundtrip
-baseline JPEGs, per-clip decode metadata/checksums, and frame
-signatures re-pointed at decoded pixels, plus frame-containment
-near-dup pairs, product-quantization ANN — PQ/ADC top-k over an
-8-codes-per-vector compressed corpus scan with exact-integer
-codebook training — the per-subspace PQ distortion report, the IVF+PQ compressed-domain probe-and-scan combination, two-stage PQ-candidates + exact re-rank, frozen-codebook streaming PQ encode (deterministic, so it is the first streaming entry carrying a full oracle), the at-rest cell-partitioned IVFPQ index whose serve path prunes unprobed cells at the file level, and normalization-insensitive "fuzzy exact" dedup; round 12 adds residual-encoding IVFPQ (the FAISS default — PQ codes quantize v − centroid(cell), exact-integer residuals keep the bit-parity oracle), the sqrt operating rule for SemDeDup cell counts, SQ8 and IVF+SQ8 scalar-quantization ANN (per-dimension int8 codes, exact-integer scales), and the frame-frequency skew guard on video near-dup; round 13 adds equal-byte-budget PQ at K=256 codes per subspace — similarity_pq256_topk — separating code budget from method in the quantizer recall story, the two-stage exact re-rank over SQ8 candidates — similarity_sq8_rerank — completing the quantizer x serving matrix, and semantic split-contamination pairs — split_semantic_leakage — the embedding-space complement to the opening-8-gram leakage report; round 14 adds the density-adaptive two-stage re-ranks — similarity_pq_rerank_auto, similarity_sq8_rerank_auto and similarity_ivfpq_rerank_auto (the FAISS-standard prune+scan+rerank stack) — whose exact-stage candidate budgets widen with the measured stage-1 near-tie plateau (never below the tuned fixed-expand floor) instead of assuming a corpus density, and completes the index lifecycle with incremental at-rest maintenance — similarity_ivfpq_append, delta vectors encoded against FROZEN structures and appended as new files in existing cell partitions, oracled against a base-only-training mirror — and streaming query serve — ann_serve_streaming, micro-batches answered against the frozen at-rest index through the batch serve path verbatim, the third streaming entry carrying a full value-hash oracle; plus cross-corpus near-dup — dedup_cross_corpus, the corpus-merge shape where neither side broadcasts: cross-side-only LSH bucket equi-join with a per-side hot-bucket drop and exact-jaccard verification, and its no-silent-caps companion cross_corpus_bucket_health reporting the exact candidate-pair volume the cap dropped vs kept per band, and corpus_merge_report — the per-document merge DECISION (exact-cross / within-incoming / near-cross / admit) on the no-broadcast symmetric plan, the sibling of dedup_incremental; plus filtered ANN serving — similarity_sq8_filtered (the selector path: the metadata predicate pushes into the compressed scan, quantizer frozen on the full corpus) and similarity_sq8_filtered_post (the naive stage-1-then-filter pipeline, registered beside it so the starvation trade stays measured and visible)).
-136 have exactly-parallel DuckDB
-oracles (dedup clustering is oracled via a recursive-CTE transitive
-closure); the O34/O35 recurrences, streaming operators, and the
-seed-dependent MLlib variants are rows-only by design (not
-SQL-expressible; both ANN variants are deterministic and carry full
-oracles). The driver's 50-entry correctness window holds every
-new/changed query (registry._WINDOW_PINNED) plus the rotation class
-of the long-stable pool whose turn it is: each name carries a frozen
-demotion class (registry._DEMOTE_ODD/_DEMOTE_EVEN/_DEMOTE_THIRD/
-_DEMOTE_FOURTH; the cycle length is registry._PARITY_PERIOD, grown
-2 -> 3 -> 4 as the pool outgrew 100 then 150 oracled names), so every
-oracled query gets a driver sf0.01 check at least once every 4 rounds
-— and every CI run exact-checks ALL oracled names against DuckDB at
-sf0.001 regardless of rotation position (tests/test_oracle_parity,
-which also pins the rotation invariants), so a value regression can
-never hide behind the cadence; only a scale-DEPENDENT one can wait,
-bounded by the period.
+queries. They cover SURVEY.md §2's operator inventory (the capture
+pipeline, the Resilience/Fixity/Chaos daily series and dashboard
+aggregates) plus the §2.6 extension operators: exact, near-dup,
+substring, semantic, cross-corpus and per-modality dedup with
+clustering; similarity search (brute force, LSH, IVF, PQ, SQ8, the
+at-rest IVFPQ index with append and streaming serve, filtered ANN);
+text analysis, tokenizer training and encoding, chunking, packing,
+mixing, splits and quality scoring; multimodal decode of real BMP, PNG,
+JPEG, WAV and MJPEG bytes; and relational/event analytics (funnel,
+retention, sessionization, attribution, temporal joins, moving
+averages, CUBE margins), several of them also as streaming queries.
+136 have exactly-parallel DuckDB oracles (dedup clustering is oracled
+via a recursive-CTE transitive closure); the O34/O35 recurrences, most
+streaming operators and the seed-dependent MLlib variants are rows-only
+by design.
+
+The driver's 50-entry correctness window holds every new/changed query
+(registry._WINDOW_PINNED) plus a cyclic slice of k = 50 - len(pinned)
+names of the rest of the oracled pool, so every oracled query gets a
+driver sf0.01 check at least once every ceil(len(pool) / k) rounds.
+Every CI run also exact-checks ALL oracled names against DuckDB at
+sf0.001 (tests/test_oracle_parity), so a value regression never waits
+for its turn; only a scale-dependent one can.
 """
 
 from __future__ import annotations

@@ -37,101 +37,37 @@ def test_rows_only_queries_run(spark, name):
 
 def test_all_oracled_queries_inside_driver_window():
     """The driver's correctness run verifies only the first 50 entries
-    of queries() — every oracled query must sit inside that window,
-    except names deliberately demoted in registry._DEMOTED (long-stable
-    entries still exactly checked here by test_oracle_parity)."""
-    from trendmachine_spark.registry import _DEMOTED
+    of queries(): the live order is this round's derived window order
+    (test_window_order_covers_pool checks its properties), and the
+    window holds oracled names only, no rows-only entry."""
+    from trendmachine_spark.registry import _ROUND, _window_order
 
-    names = list(QUERIES)
-    window = set(names[:50])
-    not_demoted = [n for n in ORACLE_QUERIES if n not in _DEMOTED]
-    missing = [n for n in not_demoted if n not in window]
-    assert not missing, (
-        f"non-demoted oracled queries fell outside the driver's 50-entry "
-        f"window: {missing} — the rotation (registry._demoted_for_round) "
-        "must cover them"
-    )
-    # anything oracled beyond the window must be a deliberately demoted
-    # name (when the window has slack, leading demoted names slide in —
-    # harmless bonus checks)
-    outside = [n for n in names[50:] if QUERIES[n].oracle is not None]
-    assert set(outside) <= set(_DEMOTED)
+    assert list(QUERIES) == _window_order(_ROUND)
+    assert all(QUERIES[n].oracle is not None for n in list(QUERIES)[:50])
 
 
-def test_demotion_rotates_every_other_round():
-    """Rotation invariant (round-4 mandate): no oracled query is absent
-    from the driver's sf0.01 window for more than one consecutive round.
-    Demoted halves of consecutive rounds are disjoint and together cover
-    the whole rotation pool; pinned (new/changed) names are never
-    demoted."""
-    from trendmachine_spark.registry import (
-        _DEMOTED,
-        _ROUND,
-        _WINDOW_PINNED,
-        _demoted_for_round,
-        _rotation_pool,
-    )
+def test_window_order_covers_pool():
+    """Property of the derived order over the live registry: each of the
+    next 8 rounds' windows holds every pinned name and at most 50
+    oracled names, any ceil(len(pool) / k) consecutive rounds cover the
+    whole oracled pool, and every order is a permutation of QUERIES."""
+    import math
 
-    from trendmachine_spark.registry import _PARITY_PERIOD, _parity_classes
+    from trendmachine_spark.registry import _ROUND, _WINDOW_PINNED, _window_order
 
-    cycle = [set(_demoted_for_round(_ROUND + i)) for i in range(_PARITY_PERIOD)]
-    cur = cycle[0]
-    assert cur == set(_DEMOTED)
-    # no name is demoted for a FULL cycle (period 2: consecutive rounds
-    # disjoint; period 3: no name in all three consecutive sets), and
-    # every pool name lands in the window EXACTLY once per cycle —
-    # together: cycle windows cover the pool with no double-booking
-    assert not set.intersection(*cycle)
-    checked_rounds = {
-        n: sum(1 for d in cycle if n not in d) for n in _rotation_pool()
-    }
-    assert all(c == 1 for c in checked_rounds.values()), (
-        {n: c for n, c in checked_rounds.items() if c != 1}
-    )
-    assert not cur & set(_WINDOW_PINNED)  # changed queries get checked NOW
-    # every class keeps the window within the driver's 50-entry limit.
-    # THIS round's window carries the pins (they never demote); future
-    # rounds' pins expire at the bump, so the look-ahead counts every
-    # oracled name's frozen class with no pin carve-out (mirroring the
-    # registry's import-time assert).
-    window_now = len(ORACLE_QUERIES) - len(_demoted_for_round(_ROUND))
-    assert window_now <= 50, f"round {_ROUND}: {window_now} in window"
-    classes = _parity_classes()
-    for ahead in range(1, _PARITY_PERIOD):
-        checked = classes[(_ROUND + ahead) % _PARITY_PERIOD]
-        window = len([n for n in ORACLE_QUERIES if n in checked])
-        assert window <= 50, f"round {_ROUND + ahead}: {window} in window"
-
-
-def test_demotion_cross_round_invariant():
-    """Pool insertions shift alphabetical indices, which can silently
-    break parity alternation across ROUNDS (not just within one
-    registry state). _PREV_DEMOTED is the literal previous-round
-    demoted list: from round 5 on the intersection must be empty; in
-    round 4 (the static-list -> rotation transition) any unavoidable
-    double-demoted stragglers must sit at the FRONT of _DEMOTED so the
-    window's slack reaches them first."""
-    from trendmachine_spark.registry import (
-        _DEMOTED, _PARITY_PERIOD, _PREV_DEMOTED, _PREV_DEMOTED_2,
-        _PREV_DEMOTED_3, _ROUND,
-    )
-
-    # illegal only if demoted a FULL cycle: this round plus the
-    # period-1 preceding rounds' literal history
-    prev_chain = [_PREV_DEMOTED, _PREV_DEMOTED_2,
-                  _PREV_DEMOTED_3][: _PARITY_PERIOD - 1]
-    overlap = [
-        n for n in _DEMOTED
-        if all(n in prev for prev in prev_chain)
-    ]
-    if _ROUND >= 5:
-        assert not overlap, (
-            f"names absent from the driver window a full cycle: {overlap} "
-            "— refresh the _PREV_DEMOTED literals at the round bump and "
-            "rebalance"
-        )
-    else:
-        assert _DEMOTED[: len(overlap)] == sorted(overlap)
+    pinned = [n for n in ORACLE_QUERIES if n in _WINDOW_PINNED]
+    pool = [n for n in ORACLE_QUERIES if n not in _WINDOW_PINNED]
+    cycle = math.ceil(len(pool) / (50 - len(pinned)))
+    windows = {}
+    for r in range(_ROUND, _ROUND + 8):
+        order = _window_order(r)
+        assert sorted(order) == sorted(QUERIES)
+        windows[r] = set(order[:50])
+        assert set(pinned) <= windows[r]
+        assert sum(QUERIES[n].oracle is not None for n in windows[r]) <= 50
+    for r in range(_ROUND, _ROUND + 8 - cycle + 1):
+        covered = set().union(*(windows[r + i] for i in range(cycle)))
+        assert set(ORACLE_QUERIES) <= covered, (r, sorted(set(pool) - covered))
 
 
 def test_documented_counts_match_registry():
@@ -158,32 +94,3 @@ def test_documented_counts_match_registry():
         assert int(m.group(1)) == n_oracled, (
             f"{mod.__name__} claims {m.group(1)} oracles, registry has {n_oracled}"
         )
-
-
-def test_documented_cadence_matches_parity_period():
-    """The driver-facing rotation-cadence claim must be DERIVED from
-    _PARITY_PERIOD, never hand-maintained: the r12 period-3 rebalance
-    left 'every other round' prose promising a cadence the code no
-    longer kept (r12 verdict 'What's wrong' #2). Both the
-    __spark_entry__ docstring and the registry's rotation comment
-    carry the canonical sentence 'at least once every N rounds' —
-    N must equal the live period in each."""
-    import re
-    from pathlib import Path
-
-    import __spark_entry__ as entry
-    from trendmachine_spark.registry import _PARITY_PERIOD
-
-    registry_src = (Path(__file__).resolve().parent.parent
-                    / "trendmachine_spark" / "registry.py").read_text()
-    for label, text in (("__spark_entry__ docstring", entry.__doc__ or ""),
-                        ("registry.py rotation comment", registry_src)):
-        claims = re.findall(r"at least once every (\d+) rounds", text)
-        assert claims, f"{label}: no 'at least once every N rounds' claim"
-        for claim in claims:
-            assert int(claim) == _PARITY_PERIOD, (
-                f"{label} promises a check every {claim} rounds but "
-                f"_PARITY_PERIOD is {_PARITY_PERIOD} — the prose drifted"
-            )
-    # stale period-era phrasing must be gone from the driver-facing doc
-    assert "every other round" not in (entry.__doc__ or "")

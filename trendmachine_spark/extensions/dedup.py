@@ -432,6 +432,21 @@ def _hash_mask(j: int) -> int:
 HASH_MASKS = tuple(_hash_mask(j) for j in range(NUM_HASHES))
 
 
+def shingle_hash(col):
+    """60-bit shingle hash: the first 15 hex digits of ``md5(col)`` as a
+    long. Engine-portable: DuckDB computes the identical int."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
+def _minhash_aggs(num_hashes: int) -> list:
+    """``min(_h xor mask_j)`` as ``mh{j}`` for each hash function j — the
+    signature aggregates over a ``_h`` shingle-hash column."""
+    return [
+        F.min(F.expr(f"_h ^ {HASH_MASKS[j]}L")).alias(f"mh{j}")
+        for j in range(num_hashes)
+    ]
+
+
 def minhash_signatures(docs: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", num_hashes: int = NUM_HASHES,
                        k: int = SHINGLE_K) -> DataFrame:
@@ -455,13 +470,8 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
     Docs with no k-gram (fewer than k words) produce no row.
     """
     sh = shingles(docs, text_col, id_col, k, distinct=False)
-    h = F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10).cast("long")
-    with_h = sh.withColumn("_h", h)
-    aggs = [
-        F.min(F.expr(f"_h ^ {HASH_MASKS[j]}L")).alias(f"mh{j}")
-        for j in range(num_hashes)
-    ]
-    return with_h.groupBy(id_col).agg(*aggs)
+    with_h = sh.withColumn("_h", shingle_hash(F.col("shingle")))
+    return with_h.groupBy(id_col).agg(*_minhash_aggs(num_hashes))
 
 
 def minhash_signatures_narrow(docs: DataFrame, text_col: str = "text",
@@ -488,10 +498,7 @@ def minhash_signatures_narrow(docs: DataFrame, text_col: str = "text",
     """
     grams = gram_array(text_col, k)
     base = docs.select(F.col(id_col), grams.alias("_g")).filter(F.size("_g") >= 1)
-    hs = F.transform(
-        F.col("_g"),
-        lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long"),
-    )
+    hs = F.transform(F.col("_g"), shingle_hash)
     base = base.select(F.col(id_col), hs.alias("_h"))
     cols = [
         F.array_min(
@@ -1038,10 +1045,9 @@ def incremental_dedup(base: DataFrame, delta: DataFrame,
 def _sided_tag(a: DataFrame, b: DataFrame, text_col: str,
                id_col: str) -> DataFrame:
     """Union of two corpora keyed by a (side, id) struct ``_sid`` —
-    the single-pipeline input of the cross-corpus operators (r14
-    optimization round): side 0 = ``a``, side 1 = ``b``. Grouping by
-    the struct keeps ids from the two corpora distinct even when the
-    raw id spaces overlap."""
+    the single-pipeline input of the cross-corpus operators: side 0 =
+    ``a``, side 1 = ``b``. Grouping by the struct keeps ids from the
+    two corpora distinct even when the raw id spaces overlap."""
     return (
         a.select(F.lit(0).alias("_side"), F.col(id_col).alias("_id"),
                  F.col(text_col))
@@ -1057,10 +1063,10 @@ def _sided_band_buckets(a: DataFrame, b: DataFrame, text_col: str,
                         id_col: str) -> DataFrame:
     """(_sid, band, bucket) for BOTH corpora through ONE shingle
     explode + ONE signature aggregation + ONE band reshape — the
-    sided single-pipeline shape of the oracle's ``sided`` CTE. Halves
-    the number of heavy passes vs per-side pipelines (r14 optimization
-    round; signatures per (side, id) are bit-identical to per-side
-    runs: the group key changes, the per-group stream does not)."""
+    sided single-pipeline shape of the oracle's ``sided`` CTE: half the
+    heavy passes of per-side pipelines, with signatures per (side, id)
+    bit-identical to per-side runs (the group key changes, the
+    per-group stream does not)."""
     tagged = _sided_tag(a, b, text_col, id_col)
     return lsh_band_buckets(
         minhash_signatures(tagged, text_col, "_sid"), "_sid")
@@ -1071,7 +1077,7 @@ def _sided_sig_sets(a: DataFrame, b: DataFrame, text_col: str,
                     k: int = SHINGLE_K) -> DataFrame:
     """Per-doc (_sid, mh0..mh{n-1}, _sh) — the sided minhash signatures
     AND the distinct hashed-shingle set, from ONE shingle explode and
-    ONE group aggregation (r15 optimization round).
+    ONE group aggregation.
 
     The verify stage of :func:`cross_corpus_near_dup` needs exactly the
     distinct set of the 60-bit shingle hashes the signatures already
@@ -1079,90 +1085,58 @@ def _sided_sig_sets(a: DataFrame, b: DataFrame, text_col: str,
     the existing exchange (one row per (doc, map partition) after
     partial aggregation) instead of re-scanning both corpora,
     re-exploding shingles and re-hashing grams for the candidate docs.
-    Measured at x10: the fused agg costs the same as the signature-only
-    agg within noise (1.1-1.3 s both, tools/exp_cross_sets2.py) while
-    the whole second sets-build subtree disappears. Set values are
-    identical to the historical verify-leg sets by construction — same
-    ``_h`` expression, and ``collect_set`` over the non-distinct stream
-    equals the distinct set."""
+    ``collect_set`` over the non-distinct stream equals the distinct
+    set."""
     tagged = _sided_tag(a, b, text_col, id_col)
     sh = shingles(tagged, text_col, "_sid", k, distinct=False)
-    h = F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10).cast("long")
-    with_h = sh.select("_sid", h.alias("_h"))
-    aggs = [
-        F.min(F.expr(f"_h ^ {HASH_MASKS[j]}L")).alias(f"mh{j}")
-        for j in range(num_hashes)
-    ]
-    aggs.append(F.collect_set("_h").alias("_sh"))
-    return with_h.groupBy("_sid").agg(*aggs)
+    with_h = sh.select("_sid", shingle_hash(F.col("shingle")).alias("_h"))
+    return with_h.groupBy("_sid").agg(
+        *_minhash_aggs(num_hashes), F.collect_set("_h").alias("_sh"))
 
 
 def cross_corpus_near_dup(a: DataFrame, b: DataFrame,
                           text_col: str = "text", id_col: str = "doc_id",
                           min_jaccard: float = 0.8,
                           max_side_bucket: int = MAX_LSH_BUCKET) -> DataFrame:
-    """Verified near-duplicate pairs ACROSS two LARGE corpora (round
-    14) — the corpus-merge shape: two crawls (or a new crawl vs an
-    existing training set at comparable size) where NEITHER side fits
-    a broadcast, so :func:`incremental_dedup`'s broadcast-the-delta
-    plan does not apply and :func:`minhash_near_dup`'s self-join would
-    waste most of its pairs on within-side duplicates the per-corpus
-    dedup already handled.
+    """Verified near-duplicate pairs ACROSS two LARGE corpora — the
+    corpus-merge shape: two crawls (or a new crawl vs an existing
+    training set at comparable size) where NEITHER side fits a
+    broadcast, so :func:`incremental_dedup`'s broadcast-the-delta plan
+    does not apply and :func:`minhash_near_dup`'s self-join would waste
+    most of its pairs on within-side duplicates the per-corpus dedup
+    already handled.
 
     Output: (a_id, b_id, jaccard) — one row per cross pair sharing an
     LSH band bucket whose EXACT word-shingle jaccard >= ``min_jaccard``.
 
-    SCALE: each side computes signatures independently (one
-    map-combined shuffle per side), then the candidate join is a
-    co-partitioned equi-join on (band, bucket) emitting ONLY A x B
-    rows — within-side pairs never exist in this plan, cutting the
-    candidate volume roughly in half vs tagging a union. Hot buckets
-    (boilerplate shared by both crawls) would cost na*nb pairs, so a
-    bucket is DROPPED from candidates when either side exceeds
-    ``max_side_bucket`` members in it — the same non-discriminative-
-    template stance as ``max_frame_freq`` on video near-dup, mirrored
-    exactly in the oracle; a pair of genuinely near-dup docs loses
-    only that band's vote and still collides on its other bands.
-    Verification prunes both corpora to candidate ids (semi-joins)
-    before any shingle explode, so exact jaccard is computed for
-    candidate docs only.
+    Plan: both corpora union into one (side, id)-keyed stream (the
+    oracle's ``sided`` CTE shape), so the shingle explode and ONE
+    map-combined aggregation (:func:`_sided_sig_sets`) compute, per
+    doc, the minhash signature AND the distinct set of 60-bit shingle
+    hashes; that per-doc table is materialized once. The band table
+    derives from it narrowly (stack, no shuffle) and is materialized
+    separately, so its consumers read slim (sid, band, bucket) rows,
+    not the hash-set payload. One conditional-sum aggregation counts
+    each (band, bucket)'s members per side; a bucket is DROPPED from
+    candidates when either side exceeds ``max_side_bucket`` members in
+    it (hot boilerplate buckets would cost na*nb pairs) — the same
+    non-discriminative-template stance as ``max_frame_freq`` on video
+    near-dup, mirrored exactly in the oracle; a genuinely near-dup pair
+    loses only that band's vote and still collides on its other bands.
+    The candidate equi-join on (band, bucket) pairs side-0 rows with
+    side-1 rows only, so within-side pairs never exist.
 
-    Both sides use the explode+agg signature (map-combined shuffle):
-    unlike :func:`incremental_dedup`'s base side — where the narrow
-    zero-shuffle fold buys "the corpus never shuffles" at interpreted-
-    HOF CPU cost — the symmetric merge has no never-shuffle side, and
-    the fold measured 30x slower than the exchange it avoids
-    (34 s vs 1.2 s per side at x10; values identical either way).
+    Verify: candidates join the materialized per-doc table directly and
+    intersect the hashed-shingle sets — no corpus re-scan or second
+    explode. Set sizes and intersections equal those of the raw
+    shingle strings while the 60-bit hash is injective on the corpus
+    vocabulary (the stance minhash itself takes), at a fraction of the
+    join payload.
 
-    r14 optimization round: ONE sided pipeline instead of two per-side
-    pipelines — both corpora union into a (side, id)-keyed stream (the
-    oracle's own ``sided`` CTE shape), so the shingle explode, the
-    signature aggregation, the band reshape and the eager
-    materialization each run ONCE over the combined input instead of
-    once per side, and the two per-side bucket-count aggregations + the
-    (band, bucket) count join collapse into one conditional-sum
-    aggregation. The verify stage intersects the 60-bit md5 shingle
-    hashes (the exact integers the signatures already minimize) instead
-    of raw shingle strings: distinct-set sizes and intersections are
-    identical while the hash family is injective on the corpus vocab
-    (checked corpus-wide by tests/tools — the same stance minhash
-    itself takes), and the per-pair join payload drops from ~3.5 KB of
-    strings to ~0.9 KB of longs per side (measured 96k candidate pairs
-    x ~115-shingle docs at x10: the array payload through the pair
-    joins was the dominant verify cost).
-
-    r15 optimization round: the per-doc hashed-shingle SET is computed
-    in the SAME aggregation as the signatures (:func:`_sided_sig_sets`)
-    and carried through the eager materialization, so the verify stage
-    joins candidates directly against the checkpointed per-doc table —
-    the whole second sets-build subtree (two corpus semi-joins + two
-    shingle explodes + two collect_set aggregations) is gone. The band
-    table derives NARROWLY (stack, no shuffle) from the same checkpoint
-    and is materialized separately so its three consumers read the
-    slim (sid, band, bucket) rows, not the array payload. Measured x10
-    interleaved best: 6.55 -> 4.19-4.75 s (tools/exp_cross_sets.py,
-    value-identity asserted first); every same-pass comparison under
-    co-tenant load favors the carried-sets shape ~2x."""
+    Signatures use the explode+agg form, not the narrow zero-shuffle
+    fold of :func:`minhash_signatures_narrow`: the symmetric merge has
+    no side that must never shuffle, and the fold measured 30x slower
+    than the exchange it avoids (values identical either way)."""
     doc_tbl = _materialize(_sided_sig_sets(a, b, text_col, id_col))
     sided = _materialize(lsh_band_buckets(
         doc_tbl.select("_sid", *[f"mh{j}" for j in range(NUM_HASHES)]),
@@ -1199,8 +1173,8 @@ def cross_corpus_near_dup(a: DataFrame, b: DataFrame,
     # runtime shape as the minhash band table)
     cand = _materialize(cand)
 
-    # verify sets come straight off the checkpointed per-doc table
-    # (r15): each side is a filter+projection of doc_tbl — no corpus
+    # verify sets come straight off the checkpointed per-doc table:
+    # each side is a filter+projection of doc_tbl — no corpus
     # re-scan, no second explode, no collect_set rebuild. Every
     # candidate doc has a set row by construction (candidates come
     # from band buckets, which exist only for docs with >= 1 shingle).

@@ -124,7 +124,6 @@ def _make_runner(params: dict):
 
 
 def score_daily_series(dense: DataFrame, sigparams=None,
-                       slim_arrow: bool = False,
                        url_buckets: int | None = None) -> DataFrame:
     """Add ``resilience`` and ``fixity`` columns to the dense daily series.
 
@@ -140,12 +139,10 @@ def score_daily_series(dense: DataFrame, sigparams=None,
     bit-identical results — pinned by the partition/batch-invariance
     test — it only trades parallelism against per-task constants.
 
-    ``slim_arrow=False`` (default) routes the whole dense row through
-    the map and returns scored rows directly — no join-back, the dense
-    subtree appears once in the plan; with large streamed batches the
-    extra columns ride nearly free. ``slim_arrow=True`` keeps the
-    historical shape: only (url, day, specimen, content) cross the
-    Python boundary and the two score columns hash-join back.
+    The whole dense row crosses the Python boundary and comes back
+    scored, so the dense subtree appears once in the plan (no
+    join-back); with large streamed batches the extra columns ride
+    nearly free.
 
     The map function and its helpers are deliberately *nested* so
     cloudpickle serializes them by value — workers never need the
@@ -156,14 +153,9 @@ def score_daily_series(dense: DataFrame, sigparams=None,
     known = list(params)
     nparts = url_buckets if url_buckets is not None else _partition_count(dense)
 
-    src = dense.select("url", "day", "specimen", "content") if slim_arrow else dense
-    in_cols = [f.name for f in src.schema.fields]
-    if slim_arrow:
-        out_fields = [src.schema["url"], src.schema["day"]]
-    else:
-        out_fields = list(src.schema.fields)
+    in_cols = [f.name for f in dense.schema.fields]
     out_schema = T.StructType(
-        out_fields
+        list(dense.schema.fields)
         + [T.StructField("resilience", T.DoubleType()), T.StructField("fixity", T.DoubleType())]
     )
     out_cols = [f.name for f in out_schema.fields]
@@ -191,16 +183,11 @@ def score_daily_series(dense: DataFrame, sigparams=None,
             pdf["fixity"] = fix
             yield pdf[out_cols]
 
-    scored = (
-        src.repartition(nparts, "url")
+    return (
+        dense.repartition(nparts, "url")
         .sortWithinPartitions("url", "day")
         .mapInPandas(stream, schema=out_schema)
     )
-    if slim_arrow:
-        return dense.join(
-            scored.select("url", "day", "resilience", "fixity"), ["url", "day"]
-        )
-    return scored
 
 
 def score_daily_series_multi(dense: DataFrame, param_sets: dict,

@@ -59,6 +59,7 @@ from trendmachine_spark.extensions.dedup import (
     ROWS_PER_BAND,
     SHINGLE_K,
     gram_array,
+    shingle_hash,
 )
 
 #: state: parallel arrays over bucket members (insertion-ordered)
@@ -97,11 +98,7 @@ def band_bucket_rows(docs: DataFrame, text_col: str = "text",
         F.md5(F.col(text_col)).alias("md5"),
         grams.alias("_g"),
     )
-    hs = F.transform(
-        F.col("_g"),
-        lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long"),
-    )
-    base = base.withColumn("_h", hs)
+    base = base.withColumn("_h", F.transform(F.col("_g"), shingle_hash))
     mh = [
         F.array_min(
             F.transform(F.col("_h"), lambda h: h.bitwiseXOR(F.lit(HASH_MASKS[j])))
