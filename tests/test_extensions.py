@@ -1032,6 +1032,113 @@ def test_packed_text_token_additivity(spark):
     assert all_words == sorted(w for _, t in rows for w in t.split(" "))
 
 
+#: short docs, NULL text and repeated shingles: "a b c a b c a b c" has 3
+#: distinct shingles out of 7 grams
+VERIFY_TEXTS = {
+    1: "a b c a b c a b c",
+    2: "a b c a b c d",
+    3: "x y",
+    4: None,
+    5: "a b c d e f g h",
+    6: "q",
+    7: "a b c d e f g h i",
+    8: "",
+}
+
+
+def _py_jaccards(pairs) -> dict:
+    """Exact Jaccard over distinct word 3-gram strings; a pair of two
+    shingle-less docs has none."""
+    def sh(t):
+        w = t.split(" ") if t is not None else []
+        return {" ".join(w[i:i + 3]) for i in range(len(w) - 2)}
+
+    out = {}
+    for a, b in pairs:
+        sa, sb = sh(VERIFY_TEXTS[a]), sh(VERIFY_TEXTS[b])
+        if sa | sb:
+            out[(a, b)] = len(sa & sb) / len(sa | sb)
+    return out
+
+
+@pytest.mark.parametrize("min_jaccard", [0.0, 0.8])
+def test_verify_candidates_matches_python_model(spark, min_jaccard):
+    from trendmachine_spark.extensions.clusters import verify_candidates
+
+    docs = spark.createDataFrame(sorted(VERIFY_TEXTS.items()), "doc_id long, text string")
+    ids = sorted(VERIFY_TEXTS)
+    pairs = [(a, b) for a in ids for b in ids if a < b]
+    cands = spark.createDataFrame(pairs, "id_a long, id_b long")
+    got = {(r["id_a"], r["id_b"]): r["jaccard"]
+           for r in verify_candidates(cands, docs, min_jaccard=min_jaccard).collect()}
+    want = {p: j for p, j in _py_jaccards(pairs).items() if j >= min_jaccard}
+    assert got == want
+    # "x y" vs "q": an empty union scores no row instead of dividing 0 by
+    # 0, which under ANSI mode aborted the whole job
+    assert (3, 6) not in got
+    if min_jaccard == 0.0:
+        assert got[(1, 2)] == 0.75  # 3 shared of 4 distinct: repeats count once
+        assert got[(1, 3)] == 0.0
+
+
+def test_verify_candidates_builds_sets_without_lambdas(spark):
+    """Shingle sets come from the codegen'd explode, not an interpreted
+    higher-order-function gram builder."""
+    from trendmachine_spark.extensions.clusters import verify_candidates
+
+    docs = spark.createDataFrame(sorted(VERIFY_TEXTS.items()), "doc_id long, text string")
+    cands = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    plan = verify_candidates(cands, docs)._jdf.queryExecution().optimizedPlan().toString()
+    assert "lambdafunction" not in plan
+
+
+def test_connected_components_three_rounds(spark, monkeypatch):
+    """Path 0-1-2 needs two label rounds plus one that changes nothing:
+    labels are the min id per component and the loop stops on the
+    first unchanged round (one checkpoint per round)."""
+    from trendmachine_spark.extensions.clusters import connected_components
+
+    edges = spark.createDataFrame(
+        [(1, 2), (0, 1), (10, 11), (12, 11), (20, 21)], "id_a long, id_b long")
+    rounds = [0]
+    frame = type(edges)
+    plain = frame.localCheckpoint
+
+    def counting(df, *a, **kw):
+        rounds[0] += 1
+        return plain(df, *a, **kw)
+
+    monkeypatch.setattr(frame, "localCheckpoint", counting)
+    got = {r["node"]: r["cluster"] for r in connected_components(edges).collect()}
+    assert got == {0: 0, 1: 0, 2: 0, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
+    assert rounds[0] == 3
+
+
+#: Spark jobs of one dedup_clusters collect on the ``docs`` fixture under
+#: the test session's confs: the LSH candidate checkpoint, the verified
+#: pairs materialized once, then two label rounds (checkpoint + count of
+#: changed rows each) and the collect. 31, or 32 when AQE's re-planning
+#: of the verify joins races its stage submissions; verifying each edge
+#: direction separately and joining old to new labels per round took 34-35.
+DEDUP_CLUSTERS_JOB_BUDGET = 32
+
+
+def test_dedup_clusters_job_budget(spark, docs):
+    from trendmachine_spark.extensions.clusters import dedup_clusters
+
+    sc = spark.sparkContext
+    group = "dedup-clusters-budget"
+    sc.setJobGroup(group, "one dedup_clusters collect")
+    try:
+        rows = dedup_clusters(docs.select("doc_id", "text")).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert sorted(tuple(r) for r in rows) == [(0, 0, 1), (1, 0, 0)]
+    assert jobs <= DEDUP_CLUSTERS_JOB_BUDGET, (
+        f"{jobs} Spark jobs per dedup_clusters collect > budget {DEDUP_CLUSTERS_JOB_BUDGET}")
+
+
 def test_connected_components_chain_graph_escalates(spark):
     """A 200-node path graph (diameter 199) blows the hash-min budget;
     connected_components must escalate to large-star/small-star and

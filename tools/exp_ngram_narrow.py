@@ -21,7 +21,8 @@ from trendmachine_spark.registry_core import QUERIES, _docs
 def narrow_pairs(docs, text_col="text", id_col="doc_id",
                  max_shingle_freq=D.MAX_SHINGLE_FREQ):
     src = D.rebalance_for_fanout(docs.select(F.col(id_col), F.col(text_col)))
-    g = D.gram_array(text_col, D.SHINGLE_K)
+    src = src.select(F.col(id_col), F.split(F.col(text_col), " ").alias("_w"))
+    g = D.gram_array("_w", D.SHINGLE_K)
     base = src.select(F.col(id_col), F.array_distinct(g).alias("_g"))
     base = base.filter(F.size("_g") >= 1)
     sh = base.select(

@@ -1,35 +1,33 @@
-"""End-to-end near-duplicate pipeline: candidates -> verify -> clusters.
+"""Near-duplicate clusters: LSH candidates -> exact verify -> components.
 
-The missing last step of every training-data dedup run (driver mandate
-SURVEY.md §2.6): LSH produces candidate *pairs*, the exact verifier
-scores them, but a usable dedup needs *clusters* — connected components
-over the verified pair graph — and one keeper per cluster.
+LSH (:func:`~trendmachine_spark.extensions.dedup.minhash_near_dup`)
+yields candidate *pairs*; a usable dedup needs *clusters* — connected
+components over the verified pair graph — and one keeper per cluster.
 
-* verify_candidates     — exact Jaccard on candidate pairs only. The
-  pair set is LSH output (tiny vs the corpus), so each pair's
-  intersection is computed with ``array_intersect`` on the two docs'
-  shingle sets — a narrow per-row expression after two hash joins on
-  doc id; NO inverted-index self-join is re-run here.
-* connected_components  — iterative min-label propagation (hash-min):
-  each round every node adopts the smallest label among itself and its
-  neighbors; converges in O(graph diameter) rounds. Near-dup clusters
-  are small and dense (diameter rarely above 2-3), so 3-5 rounds close
-  real corpora. Each round is one shuffle-join + groupBy; intermediate
-  results are persisted and lineage is truncated with localCheckpoint
-  so the plan does not grow with the iteration count.
-* dedup_clusters        — the composed pipeline; output one row per
-  clustered doc with its cluster id (= min doc id in the component)
-  and keeper flag.
+* verify_candidates     — exact Jaccard of each candidate pair over the
+  two docs' distinct string shingles. The sets come from
+  :func:`~trendmachine_spark.extensions.dedup.shingle_sets` (codegen'd
+  explode + one id aggregation, no higher-order functions) and meet the
+  pairs in two left joins on doc id, which read one sets exchange; the
+  intersection is a narrow ``array_intersect`` per pair. Only candidate
+  pairs are scored.
+* connected_components  — hash-min label propagation: each round every
+  node adopts the smallest label among itself and its neighbours (one
+  join + one groupBy + one left join), written to a ``localCheckpoint``
+  together with a changed-flag, so the convergence test is a count of
+  flagged rows on that checkpoint. Near-dup components are small and
+  dense, so a few rounds close real corpora; chain-shaped graphs
+  (template pages drifting one token at a time) escalate after
+  ``max_iter`` rounds to alternating large-star/small-star (Kiveris et
+  al., "Connected Components in MapReduce and Beyond", SoCC'14), which
+  contracts any graph in O(log^2 n) rounds.
+* dedup_clusters        — the composed pipeline: one row per clustered
+  doc with its cluster id (= min doc id in the component) and keeper
+  flag. The verified pairs are materialized once, because the
+  components read them twice (both edge directions).
 
-Scale: the iterative join is over the *verified-pair* graph — orders of
-magnitude smaller than the corpus. For pathological chain-shaped graphs
-(diameter ~ n) the hash-min rounds degrade — template pages that drift
-one token per generation DO produce long chains at corpus scale — so
-:func:`connected_components` escalates automatically: after
-``max_iter`` hash-min rounds it switches to alternating
-large-star/small-star (Kiveris et al., "Connected Components in
-MapReduce and Beyond", SoCC'14), which contracts any graph in
-O(log^2 n) rounds with the same join-shape per round.
+Every iterative step runs over the verified-pair graph, orders of
+magnitude smaller than the corpus.
 """
 
 from __future__ import annotations
@@ -38,19 +36,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from trendmachine_spark.extensions.dedup import (
-    SHINGLE_K,
-    gram_array,
+    _materialize,
     minhash_near_dup,
+    shingle_sets,
 )
-
-
-def shingle_sets(docs: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id", k: int = SHINGLE_K) -> DataFrame:
-    """(id, sharr, n_sh) — per-doc distinct shingle array; narrow map."""
-    sharr = F.array_distinct(gram_array(text_col, k))
-    return docs.select(
-        F.col(id_col), sharr.alias("sharr")
-    ).withColumn("n_sh", F.size("sharr"))
 
 
 def verify_candidates(candidates: DataFrame, docs: DataFrame,
@@ -58,24 +47,27 @@ def verify_candidates(candidates: DataFrame, docs: DataFrame,
                       min_jaccard: float = 0.8) -> DataFrame:
     """(id_a, id_b, jaccard) for candidate pairs with exact jaccard >= t.
 
-    jaccard = |A ∩ B| / |A ∪ B| over full distinct-shingle sets — exact
-    integer ratio, bit-identical across engines. Two hash joins bring
-    the shingle arrays to the (small) pair set; the intersection size is
-    a narrow array op, so the verifier never touches non-candidate rows.
+    jaccard = |A ∩ B| / |A ∪ B| over the two docs' distinct string
+    shingles — an exact integer ratio, bit-identical across engines.
+    The shingle sets (:func:`shingle_sets`) reach the pairs through two
+    left joins on doc id whose sides are the same plan, so the sets are
+    built once and the second join reuses the exchange; a doc without
+    shingles (fewer than 3 words, NULL text) counts as the empty set.
+    A pair of two empty sets has no Jaccard and yields no row; a pair
+    with one empty side scores 0.0.
     """
     sets = shingle_sets(docs, text_col, id_col)
     a = sets.select(F.col(id_col).alias("id_a"), F.col("sharr").alias("_sa"),
                     F.col("n_sh").alias("_na"))
     b = sets.select(F.col(id_col).alias("id_b"), F.col("sharr").alias("_sb"),
                     F.col("n_sh").alias("_nb"))
-    inter = F.size(F.array_intersect("_sa", "_sb"))
+    empty = F.array().cast("array<string>")
+    inter = F.size(F.array_intersect(F.coalesce("_sa", empty), F.coalesce("_sb", empty)))
+    union = F.coalesce("_na", F.lit(0)) + F.coalesce("_nb", F.lit(0)) - F.col("_ni")
     return (
-        candidates.join(a, "id_a").join(b, "id_b")
+        candidates.join(a, "id_a", "left").join(b, "id_b", "left")
         .withColumn("_ni", inter)
-        .withColumn(
-            "jaccard",
-            F.col("_ni").cast("double") / (F.col("_na") + F.col("_nb") - F.col("_ni")),
-        )
+        .withColumn("jaccard", F.when(union > 0, F.col("_ni").cast("double") / union))
         .filter(F.col("jaccard") >= min_jaccard)
         .select("id_a", "id_b", "jaccard")
     )
@@ -169,15 +161,17 @@ def _star_components(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
 def connected_components(edges: DataFrame, max_iter: int = 8) -> DataFrame:
     """(node, cluster) — cluster = min node id reachable in the pair graph.
 
-    Hash-min label propagation: labels start as the node's own id; each
-    round a node adopts min(own label, neighbors' labels). Converged
-    when no label changes (checked with a scalar count — no data is
-    collected to the driver). Near-dup components are small and dense
-    (diameter 2-3), so hash-min closes them in a handful of rounds; if
-    ``max_iter`` rounds do NOT converge the graph has long chains
-    (diameter > max_iter) and the routine ESCALATES to alternating
-    large-star/small-star (:func:`_star_components`), which contracts
-    chain graphs in O(log^2 n) rounds instead of O(diameter).
+    Hash-min label propagation over the (id_a, id_b) edges, read in both
+    directions: labels start as each node's own id; a round takes every
+    node's minimum neighbour label (join + groupBy) and keeps
+    ``least(label, that minimum)`` (left join). The round's labels are
+    written to a ``localCheckpoint`` with a ``_chg`` flag (the neighbour
+    minimum is below the old label; labels only decrease), and the
+    round converged when no flagged row is left — a count over the
+    checkpoint, with no join back to the previous labels and nothing
+    collected to the driver. If ``max_iter`` rounds do not converge,
+    the graph has long chains, and the routine escalates to alternating
+    large-star/small-star (:func:`_star_components`), O(log^2 n) rounds.
     """
     both = edges.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
@@ -202,17 +196,13 @@ def connected_components(edges: DataFrame, max_iter: int = 8) -> DataFrame:
                 .select(
                     "node",
                     F.least(F.col("label"), F.coalesce("_nl", "label")).alias("label"),
+                    F.coalesce(F.col("_nl") < F.col("label"), F.lit(False)).alias("_chg"),
                 )
                 .localCheckpoint(eager=True)  # truncate lineage per round
             )
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "node")
-                .filter(F.col("n.label") != F.col("o.label"))
-                .count()
-            )
+            changed = new_labels.filter("_chg").count()
             labels.unpersist()
-            labels = new_labels
+            labels = new_labels.select("node", "label")
             if changed == 0:
                 return labels.select("node", F.col("label").alias("cluster"))
     finally:
@@ -228,10 +218,12 @@ def dedup_clusters(docs: DataFrame, text_col: str = "text",
 
     Output: (doc_id, cluster_id, is_keeper) for every doc in a verified
     near-dup cluster; cluster_id = min doc id in the component, the
-    keeper is that doc (deterministic smallest-id policy).
+    keeper is that doc (deterministic smallest-id policy). The verified
+    pairs are materialized once: the components read both directions
+    of every edge, which would otherwise re-run the verify per branch.
     """
     cands = minhash_near_dup(docs, text_col, id_col)
-    verified = verify_candidates(cands, docs, text_col, id_col, min_jaccard)
+    verified = _materialize(verify_candidates(cands, docs, text_col, id_col, min_jaccard))
     comps = connected_components(verified)
     return comps.select(
         F.col("node").alias("doc_id"),

@@ -381,9 +381,15 @@ def exact_norm_dedup(docs: DataFrame, text_col: str = "text",
     )
 
 
-def gram_array(text_col: str = "text", k: int = SHINGLE_K):
-    """Column: array of word k-grams in document order (may repeat)."""
-    words = F.split(F.col(text_col), " ")
+def gram_array(words_col: str, k: int = SHINGLE_K):
+    """Column: array of word k-grams in document order (may repeat),
+    over ``words_col``, a column holding ``split(text, ' ')``.
+
+    Project the words as their own column first: a ``transform`` lambda
+    that references the ``split`` expression itself evaluates it again
+    for every gram, while an attribute reference reads it once per row.
+    """
+    words = F.col(words_col)
     # NB: sequence(1, n) with n < 1 counts DOWN ([1, 0]) — guard short docs
     idx = F.when(
         F.size(words) >= k,
@@ -420,6 +426,20 @@ def shingles(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     gram = F.concat_ws(" ", *[F.element_at(F.col("_w"), F.col("_i") + j) for j in range(k)])
     sh = idx.select(F.col(id_col), gram.alias("shingle"))
     return sh.distinct() if distinct else sh
+
+
+def shingle_sets(docs: DataFrame, text_col: str = "text",
+                 id_col: str = "doc_id", k: int = SHINGLE_K) -> DataFrame:
+    """(id, sharr, n_sh) — each doc's distinct string shingles and their
+    count: the codegen'd :func:`shingles` explode, then one id
+    aggregation (``collect_set``, map-side combined). Docs with fewer
+    than ``k`` words (or NULL text) have no shingles and no row."""
+    return (
+        shingles(docs, text_col, id_col, k, distinct=False)
+        .groupBy(id_col)
+        .agg(F.collect_set("shingle").alias("sharr"))
+        .withColumn("n_sh", F.size("sharr"))
+    )
 
 
 def _hash_mask(j: int) -> int:
@@ -496,8 +516,9 @@ def minhash_signatures_narrow(docs: DataFrame, text_col: str = "text",
     Docs with fewer than ``k`` words are dropped (no shingles), exactly
     matching the explode form's semantics.
     """
-    grams = gram_array(text_col, k)
-    base = docs.select(F.col(id_col), grams.alias("_g")).filter(F.size("_g") >= 1)
+    words = docs.select(F.col(id_col), F.split(F.col(text_col), " ").alias("_w"))
+    base = words.select(F.col(id_col), gram_array("_w", k).alias("_g"))
+    base = base.filter(F.size("_g") >= 1)
     hs = F.transform(F.col("_g"), shingle_hash)
     base = base.select(F.col(id_col), hs.alias("_h"))
     cols = [
@@ -987,25 +1008,20 @@ def incremental_dedup(base: DataFrame, delta: DataFrame,
         .distinct()
     )
 
-    def _sets(docs: DataFrame, keep_ids: DataFrame | None) -> DataFrame:
-        src = docs
-        if keep_ids is not None:
-            src = docs.join(F.broadcast(keep_ids), id_col)
-        return (
-            shingles(src, text_col, id_col, distinct=False)
-            .groupBy(id_col)
-            .agg(F.collect_set("shingle").alias("_sh"))
-        )
-    base_sets = _sets(base, cand.select(F.col("base_id").alias(id_col)).distinct())
-    delta_sets = _sets(delta, None)
+    cand_base = base.join(
+        F.broadcast(cand.select(F.col("base_id").alias(id_col)).distinct()), id_col)
+    base_sets = shingle_sets(cand_base, text_col, id_col)
+    delta_sets = shingle_sets(delta, text_col, id_col)
     verified = (
         cand.join(
-            base_sets.select(F.col(id_col).alias("base_id"), F.col("_sh").alias("_shb")),
+            base_sets.select(F.col(id_col).alias("base_id"), F.col("sharr").alias("_shb"),
+                             F.col("n_sh").alias("_nb")),
             "base_id",
         )
         .join(
             F.broadcast(
-                delta_sets.select(F.col(id_col).alias("delta_id"), F.col("_sh").alias("_shd"))
+                delta_sets.select(F.col(id_col).alias("delta_id"),
+                                  F.col("sharr").alias("_shd"), F.col("n_sh").alias("_nd"))
             ),
             "delta_id",
         )
@@ -1013,7 +1029,7 @@ def incremental_dedup(base: DataFrame, delta: DataFrame,
         .withColumn(
             "_jac",
             F.col("_inter").cast("double")
-            / (F.size("_shd") + F.size("_shb") - F.col("_inter")),
+            / (F.col("_nd") + F.col("_nb") - F.col("_inter")),
         )
         .filter(F.col("_jac") >= min_jaccard)
         .select("delta_id")

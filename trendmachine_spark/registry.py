@@ -299,6 +299,10 @@ _WINDOW_PINNED: list[str] = [
     "dup_span_profile",
     "dup_span_histogram",
     "dedup_video_frames",
+    "dedup_clusters",
+    "training_corpus",
+    "dedup_clusters_ensemble",
+    "dedup_incremental",
 ]
 
 

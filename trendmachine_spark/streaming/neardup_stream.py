@@ -91,13 +91,13 @@ def band_bucket_rows(docs: DataFrame, text_col: str = "text",
     Parity with the batch operators is pinned by
     tests/test_neardup_stream.py::test_band_bucket_rows_match_batch.
     """
-    grams = gram_array(text_col, k)
     base = docs.select(
         F.col(id_col).alias("doc_id"),
         F.col(time_col).alias("event_time"),
         F.md5(F.col(text_col)).alias("md5"),
-        grams.alias("_g"),
+        F.split(F.col(text_col), " ").alias("_w"),
     )
+    base = base.select("doc_id", "event_time", "md5", gram_array("_w", k).alias("_g"))
     base = base.withColumn("_h", F.transform(F.col("_g"), shingle_hash))
     mh = [
         F.array_min(
